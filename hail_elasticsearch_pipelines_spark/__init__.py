@@ -21,4 +21,10 @@ Layout:
     streaming/  incremental batch-resume notes (reference is batch-only)
 """
 
+import logging
+
 __version__ = "0.1.0"
+
+# the package's one logger; the application decides where records go
+log = logging.getLogger(__name__)
+log.addHandler(logging.NullHandler())

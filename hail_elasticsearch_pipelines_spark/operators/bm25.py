@@ -1330,6 +1330,37 @@ def _phrase_suggest_rows(
     return out
 
 
+def empty_df(spark: SparkSession, schema: T.StructType) -> DataFrame:
+    """An empty answer whose actions launch no Spark job: limit(0)
+    optimises to an empty local relation, where a bare
+    ``createDataFrame([])`` plans an RDD scan."""
+    return spark.createDataFrame([], schema).limit(0)
+
+
+def term_filter(terms: list[str], n_term_buckets: int):
+    """pyarrow filter for the rows of ``terms``, partition-pruned by
+    term_bucket."""
+    import pyarrow.dataset as ds
+
+    buckets = sorted({term_bucket(t, n_term_buckets) for t in terms})
+    return ds.field("term_bucket").isin(buckets) & ds.field("term").isin(terms)
+
+
+def read_global_dfs(source, terms: list[str], n_term_buckets: int) -> dict[str, int]:
+    """Global document frequency per term, read with pyarrow from
+    ``source``, a hive-partitioned dataset of the term dictionary (or,
+    for an index without one, the postings): only the term/df columns
+    of the terms' buckets, summed over a term's rows.  Terms absent
+    from the index are absent from the result."""
+    tbl = source.to_table(
+        filter=term_filter(terms, n_term_buckets), columns=["term", "df"]
+    )
+    out: dict[str, int] = {}
+    for t, d in zip(tbl["term"].to_pylist(), tbl["df"].to_pylist()):
+        out[t] = out.get(t, 0) + int(d)
+    return out
+
+
 class IndexSearcher:
     """Query-side entry point over a published index directory."""
 
@@ -1345,6 +1376,8 @@ class IndexSearcher:
         manifest flip) never changes what this searcher reads — old
         state until reload_manifest(), complete new state after, never
         a mix."""
+        import pyarrow.dataset as ds
+
         from ..layout import load_manifest, table_path
 
         self.manifest = load_manifest(self.index_dir)
@@ -1355,8 +1388,13 @@ class IndexSearcher:
             table_path(self.index_dir, "postings", self.manifest)
         )
         td_path = table_path(self.index_dir, "termdict", self.manifest)
-        self._termdict = (
-            self.spark.read.parquet(td_path) if os.path.exists(td_path) else None
+        has_td = os.path.exists(td_path)
+        self._termdict = self.spark.read.parquet(td_path) if has_td else None
+        self._df_source = ds.dataset(
+            td_path if has_td
+            else table_path(self.index_dir, "postings", self.manifest),
+            format="parquet",
+            partitioning="hive",
         )
         self._doclens_path = table_path(self.index_dir, "doclens", self.manifest)
         self._nested_path = table_path(self.index_dir, "nested", self.manifest)
@@ -1395,25 +1433,9 @@ class IndexSearcher:
         )
 
     def global_dfs(self, terms: list[str]) -> dict[str, int]:
-        """Global document frequency per term.  Scans the term DICTIONARY
-        (tiny, partition-pruned by term_bucket), never posting blobs."""
-        if self._termdict is not None:
-            buckets = sorted({term_bucket(t, self.n_term_buckets) for t in terms})
-            rows = (
-                self._termdict.filter(
-                    F.col("term_bucket").isin(buckets) & F.col("term").isin(terms)
-                )
-                .select("term", "df")
-                .collect()
-            )
-            return {r["term"]: int(r["df"]) for r in rows}
-        rows = (
-            self._term_rows(terms)
-            .groupBy("term")
-            .agg(F.sum("df").alias("df"))
-            .collect()
-        )
-        return {r["term"]: int(r["df"]) for r in rows}
+        """Global document frequency per term, read on the driver from
+        the term dictionary (see read_global_dfs) — no Spark job."""
+        return read_global_dfs(self._df_source, terms, self.n_term_buckets)
 
     # columns the term/bool scoring kernels need — pos_blob (the
     # positional stream, comparable in bytes to the postings themselves)
@@ -1425,27 +1447,30 @@ class IndexSearcher:
         "block_last", "block_max_tf", "block_min_dl", "block_off",
     )
 
-    def _rows_with_global_df(self, terms_sorted: list[str]) -> DataFrame | None:
-        """Pruned posting rows (scoring columns only) annotated with
-        each term's GLOBAL df via a broadcast join against the (pruned)
-        term dictionary — so scoring runs as ONE Spark job, no
-        driver-side df-lookup job first.  Returns None when the index
-        predates the termdict table."""
-        if self._termdict is None:
-            return None
-        buckets = sorted({term_bucket(t, self.n_term_buckets) for t in terms_sorted})
-        td = (
-            self._termdict.filter(
-                F.col("term_bucket").isin(buckets) & F.col("term").isin(terms_sorted)
-            )
-            .groupBy("term")
-            .agg(F.sum("df").alias("df_global"))
+    def _rows_with_global_df(
+        self, terms: list[str]
+    ) -> tuple[DataFrame, dict[str, int]]:
+        """Pruned posting rows (scoring columns only) of the terms the
+        index holds, each annotated with its GLOBAL df as a literal map
+        lookup, plus those dfs.  The dfs come from the driver-side
+        termdict read (global_dfs), so scoring is the query's only Spark
+        job, and a caller can answer a query that provably matches
+        nothing without launching one."""
+        dfs = self.global_dfs(terms)
+        present = sorted(dfs)
+        df_map = (
+            F.create_map(*[x for t in present for x in (F.lit(t), F.lit(dfs[t]))])[
+                F.col("term")
+            ]
+            if present
+            else F.lit(None)
         )
-        return (
-            self._term_rows(terms_sorted)
+        rows = (
+            self._term_rows(present)
             .select(*self.SCORING_COLS)
-            .join(F.broadcast(td), "term")
+            .withColumn("df_global", df_map.cast("long"))
         )
+        return rows, dfs
 
     # Auto-gate threshold for two-phase distributed segment pruning:
     # measured crossover on the 200k-doc bench corpus, local[32] (see
@@ -1512,18 +1537,10 @@ class IndexSearcher:
         n_docs = self.n_docs
         get_deletes = self._segment_deletes_fn()
 
-        rows = self._rows_with_global_df(terms_sorted)
-        if rows is None:
-            # legacy two-job path: collect dfs, then score
-            dfs = self.global_dfs(terms_sorted)
-            if not dfs or (mode_u == "AND" and any(t not in dfs for t in terms_sorted)):
-                return self.spark.createDataFrame([], RESULT_SCHEMA)
-            rows = self._term_rows(terms_sorted).select(*self.SCORING_COLS).withColumn(
-                "df_global",
-                F.create_map(
-                    *[x for t, d in dfs.items() for x in (F.lit(t), F.lit(d))]
-                )[F.col("term")],
-            )
+        rows, dfs = self._rows_with_global_df(terms_sorted)
+        # too few of the terms in the index for any doc to match
+        if not dfs or len(dfs) < (len(terms_sorted) if mode_u == "AND" else msm):
+            return empty_df(self.spark, RESULT_SCHEMA)
 
         def score_segment(pdf: pd.DataFrame) -> pd.DataFrame:
             if pdf.empty:
@@ -1773,15 +1790,7 @@ class IndexSearcher:
         n_docs = self.n_docs
         get_deletes = self._segment_deletes_fn()
 
-        rows = self._rows_with_global_df(terms)
-        if rows is None:
-            dfs = self.global_dfs(terms)
-            rows = self._term_rows(terms).select(*self.SCORING_COLS).withColumn(
-                "df_global",
-                F.create_map(
-                    *[x for t, d in dfs.items() for x in (F.lit(t), F.lit(d))]
-                )[F.col("term")],
-            )
+        rows, _ = self._rows_with_global_df(terms)
 
         if ranges or phrases or nested:
             # range/phrase/nested filters evaluate on the doc-set path
@@ -1948,17 +1957,9 @@ class IndexSearcher:
         }
         n_docs = self.n_docs
         get_deletes = self._segment_deletes_fn()
-        rows = self._rows_with_global_df(expanded)
-        if rows is None:
-            dfs = self.global_dfs(expanded)
-            if not dfs:
-                return self.spark.createDataFrame([], RESULT_SCHEMA)
-            rows = self._term_rows(expanded).select(*self.SCORING_COLS).withColumn(
-                "df_global",
-                F.create_map(
-                    *[x for t, d in dfs.items() for x in (F.lit(t), F.lit(d))]
-                )[F.col("term")],
-            )
+        rows, dfs = self._rows_with_global_df(expanded)
+        if not dfs:
+            return empty_df(self.spark, RESULT_SCHEMA)
 
         def score_segment(pdf: pd.DataFrame) -> pd.DataFrame:
             if pdf.empty:
@@ -2045,7 +2046,7 @@ class IndexSearcher:
         semantics — every expanded term scores with its own idf)."""
         terms = self.expand_prefix(prefix, max_expansions)
         if not terms:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return empty_df(self.spark, RESULT_SCHEMA)
         return self.search(terms, mode="OR", k=k)
 
     DEFAULT_FUZZY_EXPANSIONS = 50  # the ES fuzzy-query default
@@ -2120,7 +2121,7 @@ class IndexSearcher:
         rare typo variants when their df differs)."""
         terms = self.expand_fuzzy(term, max_edits, prefix_length, max_expansions)
         if not terms:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return empty_df(self.spark, RESULT_SCHEMA)
         return self.search(terms, mode="OR", k=k)
 
     def expand_regexp(
@@ -2185,7 +2186,7 @@ class IndexSearcher:
         term keeps its own idf)."""
         terms = self.expand_regexp(pattern, max_expansions, field)
         if not terms:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return empty_df(self.spark, RESULT_SCHEMA)
         return self.search(terms, mode="OR", k=k)
 
     def _facet_terms_of(self, fields: list[str]) -> dict[str, list[str]]:
@@ -2243,7 +2244,7 @@ class IndexSearcher:
         fterms = sorted({t for ts in facet_terms.values() for t in ts})
         all_terms = sorted(set(qterms) | set(fterms))
         if not all_terms or not qterms:
-            return self.spark.createDataFrame([], FACET_RESULT_SCHEMA)
+            return empty_df(self.spark, FACET_RESULT_SCHEMA)
         rows = self._term_rows(all_terms).select("segment", "term", "blob")
         qset = set(qterms)
         field_of = {
@@ -2346,7 +2347,7 @@ class IndexSearcher:
         mode_u = mode.upper()
         ast, qterms = self._query_ast_terms(query, mode_u)
         if not qterms:
-            return self.spark.createDataFrame([], STATS_PARTIAL_SCHEMA)
+            return empty_df(self.spark, STATS_PARTIAL_SCHEMA)
         rows = self._term_rows(qterms).select("segment", "term", "blob")
         get_deletes = self._segment_deletes_fn()
 
@@ -2404,7 +2405,7 @@ class IndexSearcher:
         mode_u = mode.upper()
         ast, qterms = self._query_ast_terms(query, mode_u)
         if not qterms:
-            return self.spark.createDataFrame([], HISTOGRAM_SCHEMA)
+            return empty_df(self.spark, HISTOGRAM_SCHEMA)
         rows = self._term_rows(qterms).select("segment", "term", "blob")
         get_deletes = self._segment_deletes_fn()
 
@@ -2551,7 +2552,7 @@ class IndexSearcher:
             like_text, max_query_terms, min_term_freq, min_doc_freq
         )
         if not top:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return empty_df(self.spark, RESULT_SCHEMA)
         return self.search(top, mode="OR", k=k)
 
     def search_page(
@@ -2572,19 +2573,9 @@ class IndexSearcher:
         mode_u = mode.upper()
         avgdl, n_docs = self.avgdl, self.n_docs
         get_deletes = self._segment_deletes_fn()
-        rows = self._rows_with_global_df(terms_sorted)
-        if rows is None:
-            dfs = self.global_dfs(terms_sorted)
-            if not dfs:
-                return self.spark.createDataFrame([], RESULT_SCHEMA)
-            rows = self._term_rows(terms_sorted).select(
-                *self.SCORING_COLS
-            ).withColumn(
-                "df_global",
-                F.create_map(
-                    *[x for t, d in dfs.items() for x in (F.lit(t), F.lit(d))]
-                )[F.col("term")],
-            )
+        rows, dfs = self._rows_with_global_df(terms_sorted)
+        if not dfs:
+            return empty_df(self.spark, RESULT_SCHEMA)
         cursor = after
 
         def page_segment(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -3180,7 +3171,7 @@ class IndexSearcher:
         )
         schema = "term string, tf long, df long, positions array<int>"
         if row is None or row["text"] is None:
-            return self.spark.createDataFrame([], schema)
+            return empty_df(self.spark, schema)
         tv = py_termvector(row["text"])
         dfs = (
             self.global_dfs(sorted(t for t, _tf, _p in tv))
@@ -3417,7 +3408,7 @@ class IndexSearcher:
             ]
         )
         if not ids:
-            return self.spark.createDataFrame([], out_schema)
+            return empty_df(self.spark, out_schema)
         sample_n = len(ids)
         fg = (
             docs.filter(F.col("doc_id").isin(ids))
@@ -3573,7 +3564,7 @@ class IndexSearcher:
         try:
             df_count = matches.count()
             if df_count == 0:
-                return self.spark.createDataFrame([], RESULT_SCHEMA)
+                return empty_df(self.spark, RESULT_SCHEMA)
             idf = bm25_idf(self.n_docs, df_count)
             w = (F.lit(BM25_K1 + 1.0) * F.col("tf")) / (
                 F.col("tf")
@@ -3675,7 +3666,7 @@ class IndexSearcher:
         lead, prefix = list(phrase[:-1]), str(phrase[-1])
         expansions = self.expand_prefix(prefix, max_expansions)
         if not expansions:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return empty_df(self.spark, RESULT_SCHEMA)
         matches = self._phrase_matches(lead, slop, expansions=expansions)
         return self._score_phrase_matches(matches, k)
 
@@ -3866,7 +3857,7 @@ class IndexSearcher:
             for r in self.search(terms, mode=mode, k=window_size).collect()
         ]
         if not base:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return empty_df(self.spark, RESULT_SCHEMA)
         window = self.spark.createDataFrame(
             [(d,) for d, _s in base],
             T.StructType([T.StructField("doc_id", T.LongType(), False)]),
@@ -3980,17 +3971,9 @@ class IndexSearcher:
             | {t for _, _, ts, _, _, _, _ in bool_specs for t in ts}
         )
         if all_terms:
-            # single-job path: global dfs ride in on a broadcast termdict
-            # join (same as `search`) instead of a driver-side lookup job
-            rows = self._rows_with_global_df(all_terms)
-            if rows is None:
-                dfs = self.global_dfs(all_terms)
-                rows = self._term_rows(all_terms).select(*self.SCORING_COLS).withColumn(
-                    "df_global",
-                    F.create_map(
-                        *[x for t, d in dfs.items() for x in (F.lit(t), F.lit(d))]
-                    )[F.col("term")],
-                )
+            # single-job path: global dfs ride in as a literal map read
+            # from the termdict on the driver (same as `search`)
+            rows, _ = self._rows_with_global_df(all_terms)
             compiled_t, compiled_b = term_specs, bool_specs
 
             def score_segment(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -4069,7 +4052,7 @@ class IndexSearcher:
             )
 
         if not parts:
-            return self.spark.createDataFrame([], MULTI_RESULT_SCHEMA)
+            return empty_df(self.spark, MULTI_RESULT_SCHEMA)
         per_segment = parts[0]
         for p in parts[1:]:
             per_segment = per_segment.unionByName(p)
@@ -4247,7 +4230,7 @@ def bm25_exhaustive_df(
         n_docs, avgdl = int(stats["n_docs"]), float(stats["avgdl"] or 0.0)
         dfs = [int(stats[f"__df_{i}"] or 0) for i in range(len(terms_sorted))]
         if not any(dfs):
-            return spark.createDataFrame([], RESULT_SCHEMA)
+            return empty_df(spark, RESULT_SCHEMA)
         # idf stays Python-side math.log (bm25_idf) exactly as before —
         # the per-term weight expression is unchanged, only its tf/df
         # inputs come from the in-row counts instead of an explode+groupBy

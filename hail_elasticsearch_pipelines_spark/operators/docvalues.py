@@ -480,24 +480,11 @@ def range_mask(vals: np.ndarray, rt, is_array: bool = False) -> np.ndarray:
 
 def _scoring_rows(searcher: "IndexSearcher", qterms, mode_u: str):
     """(segment, term, blob, df_global) rows for the query terms, or
-    None when the query provably matches nothing (empty dictionary, or
-    AND with a term absent from the index).  Handles legacy indexes
-    without a termdict via a broadcast-literal df map."""
-    rows = searcher._rows_with_global_df(qterms)
-    if rows is None:  # legacy index without a termdict
-        dfs = searcher.global_dfs(qterms)
-        if not dfs or (mode_u == "AND" and any(t not in dfs for t in qterms)):
-            return None
-        rows = (
-            searcher._term_rows(qterms)
-            .select(*searcher.SCORING_COLS)
-            .withColumn(
-                "df_global",
-                F.create_map(
-                    *[x for t, d in dfs.items() for x in (F.lit(t), F.lit(d))]
-                )[F.col("term")],
-            )
-        )
+    None when the query provably matches nothing (no term in the
+    dictionary, or AND with a term absent from the index)."""
+    rows, dfs = searcher._rows_with_global_df(qterms)
+    if not dfs or (mode_u == "AND" and any(t not in dfs for t in qterms)):
+        return None
     return rows.select("segment", "term", "blob", "df_global")
 
 

@@ -572,7 +572,7 @@ def build_partials(
     This is the UDAF shape the reference never needed (SURVEY §2.9 U5):
     doc range → (term, postings blob) rows."""
     spark = docs.sparkSession
-    if num_partitions is None:
+    if num_partitions is None or num_partitions <= 0:
         num_partitions = spark.sparkContext.defaultParallelism
     if facet_fields is None:
         facet_fields = DEFAULT_FACET_FIELDS

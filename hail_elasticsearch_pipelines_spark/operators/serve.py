@@ -40,8 +40,10 @@ from .bm25 import (
     expand_fielded_terms,
     field_avgdl_map,
     load_deletes,
+    read_global_dfs,
+    term_filter,
 )
-from .index_build import bm25_idf, bm25_tf_weight, term_bucket
+from .index_build import bm25_idf, bm25_tf_weight
 
 
 def _list_np(list_scalar, dtype) -> np.ndarray:
@@ -221,21 +223,13 @@ class LocalSearcher:
         self._cache_put(term, seg, out)
         return out
 
-    def _bucket_filter(self, terms: list[str]):
-        buckets = sorted({term_bucket(t, self.n_term_buckets) for t in terms})
-        return ds.field("term_bucket").isin(buckets) & ds.field("term").isin(terms)
-
     def global_dfs(self, terms: list[str]) -> dict[str, int]:
         src = self._termdict if self._termdict is not None else self._postings
-        tbl = src.to_table(filter=self._bucket_filter(terms), columns=["term", "df"])
-        out: dict[str, int] = {}
-        for t, d in zip(tbl["term"].to_pylist(), tbl["df"].to_pylist()):
-            out[t] = out.get(t, 0) + int(d)
-        return out
+        return read_global_dfs(src, terms, self.n_term_buckets)
 
     def _term_rows(self, terms: list[str], columns: list[str]):
         return self._postings.to_table(
-            filter=self._bucket_filter(terms), columns=columns
+            filter=term_filter(terms, self.n_term_buckets), columns=columns
         )
 
     SCORING_ROW_COLS = [

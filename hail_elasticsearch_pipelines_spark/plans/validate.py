@@ -69,7 +69,8 @@ def validate_globals(globals_: dict, thresholds: ValidationThresholds) -> dict:
     metrics = {
         "n_docs": n,
         "empty_ratio": (int(globals_.get("n_empty_docs", 0)) / n) if n else 0.0,
-        "dup_ratio": (1.0 - int(globals_.get("n_uniq_texts", n)) / n) if n else 0.0,
+        # n_uniq_texts is an HLL estimate and can overshoot n: clamp at 0
+        "dup_ratio": max(0.0, 1.0 - int(globals_.get("n_uniq_texts", n)) / n) if n else 0.0,
         "avgdl": float(globals_["avgdl"]),
         "thresholds": asdict(thresholds),
     }

@@ -3,6 +3,15 @@
 Mirrors the reference's environment bootstrap (hail init inside
 `luigi_pipeline/lib/hail_tasks.py`), Spark-first: AQE on, Arrow on,
 shuffle partitions sized to the machine instead of the 200 default.
+
+Python workers start from ``pydaemon`` (``spark.python.daemon.module``),
+which wraps ``pyspark.daemon``.  Each Python task calls
+``importlib.invalidate_caches()``, and on CPython < 3.12 every cached
+``zipimporter`` then re-reads the whole ``pyspark.zip`` directory — a
+fixed ~150-250 ms per task.  The wrapper re-reads an archive only when
+its mtime or size changed; on 3.12+ it changes nothing.  Pass
+``extra_conf={"spark.python.daemon.module": "pyspark.daemon"}`` to run
+Spark's stock daemon: ``extra_conf`` is applied last and always wins.
 """
 
 from __future__ import annotations
@@ -58,6 +67,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "hail_elasticsearch_pipelines_spark.pydaemon")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # scan-split size: the 128 MB default packs a sandbox-sized corpus
         # into ~3 input splits, capping every scan stage at 3 cores no

@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import log
+
 
 def check_inputs_exist(paths: list[str]) -> None:
     missing = [p for p in paths if not os.path.exists(p)]
@@ -43,7 +45,9 @@ def spread_small_scan(df: DataFrame) -> DataFrame:
     a real at-scale corpus is untouched, so this never adds a shuffle
     where the data is already spread.  The probe reads the optimized
     plan's statistics — no job, no RDD conversion (df.rdd costs close
-    to a second of plan translation per call)."""
+    to a second of plan translation per call).  Pass a frame close to
+    its source: the estimate of a filtered or joined frame can be far
+    off."""
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     try:
@@ -51,6 +55,7 @@ def spread_small_scan(df: DataFrame) -> DataFrame:
             str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
         )
     except Exception:
+        log.debug("spread_small_scan: size probe failed, input left as is", exc_info=True)
         return df
     if size >= target * SPREAD_BYTES_PER_CORE:
         return df

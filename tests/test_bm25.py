@@ -192,3 +192,32 @@ def test_maxscore_union_skips_and_matches_exhaustive():
     n_stop_blocks = len(cache.block_last["the"])
     decoded = sum(1 for (t, _) in cache._blocks if t == "the")
     assert decoded <= 50 and decoded < 0.2 * n_stop_blocks
+
+
+def _jobs_run(spark, action) -> int:
+    """Spark jobs ``action`` launches, counted through statusTracker on
+    a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_search_runs_at_most_two_jobs(spark, searcher):
+    """Term dfs are read on the driver, so the scoring plan is the only
+    work left: its shuffle plus the final collect."""
+    searcher.search(["the", "term0042"], "OR", 10).collect()  # warm
+    assert _jobs_run(spark, lambda: searcher.search(["the", "term0042"], "OR", 10).collect()) <= 2
+    assert _jobs_run(spark, lambda: searcher.search(["the", "of"], "AND", 10).collect()) <= 2
+    assert _jobs_run(spark, lambda: searcher.search_bool("the AND term0042", k=10).collect()) <= 2
+
+
+def test_and_absent_term_runs_no_job(spark, searcher):
+    assert _jobs_run(spark, lambda: searcher.search(["zzznotaterm", "the"], "AND", 10).collect()) == 0

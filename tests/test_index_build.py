@@ -133,3 +133,21 @@ def test_term_bucket_pruning_plan(spark, small_index):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "term_bucket" in plan
+
+
+def test_build_partials_nonpositive_partitions_mean_default(spark):
+    """num_partitions <= 0 falls back to the default parallelism, like None."""
+    from hail_elasticsearch_pipelines_spark.operators.index_build import build_partials
+
+    texts = ["a b", "b c", "a a c", "d"]
+    docs = spark.createDataFrame(pd.DataFrame({
+        "doc_id": np.arange(len(texts), dtype=np.int64),
+        "doc_len": np.array([len(t.split()) for t in texts], dtype=np.int32),
+        "text": texts,
+    }))
+
+    def rows(n):
+        return sorted(tuple(r) for r in build_partials(docs, 2, 1, num_partitions=n).collect())
+
+    want = rows(None)
+    assert want and rows(0) == want and rows(-1) == want

@@ -74,3 +74,13 @@ def test_healthy_corpus_publishes_with_report(spark, tmp_path):
     assert v["empty_ratio"] <= 0.05 and v["dup_ratio"] <= 0.9
     assert v["thresholds"]["max_dup_ratio"] == 0.9
     assert os.path.exists(os.path.join(out, "_INDEX_PUBLISHED"))
+
+
+def test_dup_ratio_clamped_when_distinct_estimate_overshoots():
+    """approx_count_distinct can report more distinct texts than docs."""
+    from hail_elasticsearch_pipelines_spark.plans.validate import validate_globals
+
+    m = validate_globals(
+        {"n_docs": 1000, "n_uniq_texts": 1013, "avgdl": 50.0}, ValidationThresholds()
+    )
+    assert m["dup_ratio"] == 0.0
